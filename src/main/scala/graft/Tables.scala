@@ -126,12 +126,20 @@ object Tables {
     val cur = df.rdd.getNumPartitions
     if (cur >= p) df
     else {
-      val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-      val byData = (bytes / bytesPerTask).toLong + 1
-      val width = math.max(cur.toLong, math.min(p.toLong, byData)).toInt
+      val width = widthFor(cur, p, df.queryExecution.optimizedPlan.stats.sizeInBytes,
+        bytesPerTask)
       if (width <= cur) df else df.repartition(width, keys: _*)
     }
   }
+
+  /** [[widenedBy]]'s width: `bytes / bytesPerTask + 1` clamped to
+    * `[cur, p]`. `bytes` is a plan estimate (`BigInt`) and can exceed
+    * `Long.MaxValue` — a product of unknown-size inputs does — so the
+    * clamp to `p` happens BEFORE narrowing to `Long`; narrowing first
+    * wrapped such estimates to arbitrary (often negative) widths and
+    * silently skipped the widening. */
+  private[graft] def widthFor(cur: Int, p: Int, bytes: BigInt, bytesPerTask: Long): Int =
+    (bytes / bytesPerTask + 1).min(BigInt(p)).max(BigInt(cur)).toInt
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")

@@ -66,9 +66,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the candidate join probes the band store on (band, band_key) — an
   * equi-join Spark shuffles on the band key, skew-capped by the bucket
   * guard — and every probe of an accumulated store is BUCKET-PRUNED AT
-  * THE SCAN (r13: partition pruning skips untouched bucket directories
-  * at file-listing time, so per-batch input bytes scale with the
-  * batch's key neighborhood, not the corpus — BucketedStateSpec
+  * THE SCAN (r13: [[BucketedState.readBuckets]] lists and scans only
+  * the touched bucket directories, so per-batch input bytes scale with
+  * the batch's key neighborhood, not the corpus — BucketedStateSpec
   * measures it); verification joins are candidate-sized. Nothing
   * iterates; driver state is the store paths plus ≤256-int bucket
   * lists per read.
@@ -78,6 +78,17 @@ object LshStream {
   // store layout + replay-safe reads live in ONE home: BucketedState
   import BucketedState.{tablePath => path, overwriteBatch, readBefore}
 
+  /** Each bucketed store's `empty` frame for [[BucketedState.readBuckets]]:
+    * the columns its readers take, which every file of the store must
+    * carry (BucketedStateSpec pins them against the written files). */
+  private[graft] def bucketedStores(spark: SparkSession): Map[String, DataFrame] = {
+    import spark.implicits._
+    Map(
+      "corpus" -> Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      "bands" -> Seq.empty[(Long, Int, String)].toDF("doc_id", "band", "band_key"),
+      "sigs" -> Seq.empty[(Long, Long)].toDF("doc_id", "set_n"))
+  }
+
   /** One micro-batch: detect pairs against everything seen, then admit
     * the batch into the stores. Batch-static, callable directly (the
     * spec's equivalence harness) or from [[minhashLshStream]]; `batchId`
@@ -86,16 +97,15 @@ object LshStream {
     * partition. */
   def processBatch(spark: SparkSession, newDocsRaw: DataFrame, stateDir: String,
                    batchId: Long, maxBucket: Int = 50): Unit = {
-    import spark.implicits._
     import BucketedState._
     val sigsP = path(stateDir, "sigs"); val bandsP = path(stateDir, "bands")
     val corpusP = path(stateDir, "corpus"); val pairsP = path(stateDir, "pairs")
-    def emptyCorpus = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    val empty = bucketedStores(spark)
 
     // seen-ness probe: only the doc buckets this batch carries
     val batchDocBuckets = bucketsOf(newDocsRaw, col("doc_id"))
     val oldCorpusSeen = readBuckets(spark, corpusP, batchId, "db",
-      batchDocBuckets, emptyCorpus)
+      batchDocBuckets, empty("corpus"))
 
     // cross-batch doc dedup + in-batch doc dedup: one row per UNSEEN
     // doc_id. Seen-ness keys on the CORPUS store, not sigs — a <3-token
@@ -129,7 +139,7 @@ object LshStream {
     // needs ≥1 new side).
     val kbBuckets = bucketsOf(newBands, xxhash64(col("band_key")))
     val oldBands = readBuckets(spark, bandsP, batchId, "kb", kbBuckets,
-      Seq.empty[(Long, Int, String)].toDF("doc_id", "band", "band_key"))
+      empty("bands"))
     val allBands = oldBands.unionByName(newBands)
     val smallBuckets = allBands.groupBy(col("band"), col("band_key"))
       .agg(count(lit(1)).as("bucket_n"))
@@ -153,11 +163,11 @@ object LshStream {
       .localCheckpoint(true)
     val candBuckets = bucketsOf(candIds, col("doc_id"))
     val oldCandDocs = readBuckets(spark, corpusP, batchId, "db", candBuckets,
-      emptyCorpus).join(candIds, Seq("doc_id"), "left_semi")
+      empty("corpus")).join(candIds, Seq("doc_id"), "left_semi")
     val candSh = newSh.join(candIds, Seq("doc_id"), "left_semi")
       .unionByName(Dedup.shinglesOf(oldCandDocs))
     val oldSigsCand = readBuckets(spark, sigsP, batchId, "db", candBuckets,
-      Seq.empty[(Long, Long)].toDF("doc_id", "set_n"))
+      empty("sigs"))
     val sizes = oldSigsCand.select(col("doc_id"), col("set_n"))
       .unionByName(newSigs.select(col("doc_id"), col("set_n")))
     val inter = cand

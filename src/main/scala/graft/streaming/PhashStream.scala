@@ -42,6 +42,16 @@ object PhashStream {
   // store layout + replay-safe reads live in ONE home: BucketedState
   import BucketedState.{tablePath => path, overwriteBatch, readStore}
 
+  /** Each bucketed store's `empty` frame for [[BucketedState.readBuckets]]:
+    * the columns its readers take, which every file of the store must
+    * carry (BucketedStateSpec pins them against the written files). */
+  private[graft] def bucketedStores(spark: SparkSession): Map[String, DataFrame] = {
+    import spark.implicits._
+    Map(
+      "docs" -> Seq.empty[Long].toDF("doc_id"),
+      "chunks" -> Seq.empty[(Long, Long, Int, Long)].toDF("doc_id", "ahash", "chunk", "ck"))
+  }
+
   /** One micro-batch: detect pairs against everything seen, then admit
     * the batch. `batchId` must be the stream's monotone micro-batch id
     * (replay key AND state partition). `fingerprint` is the
@@ -53,16 +63,16 @@ object PhashStream {
   def processBatch(spark: SparkSession, newDocsRaw: DataFrame, stateDir: String,
                    batchId: Long,
                    fingerprint: DataFrame => DataFrame = Multimodal.bmpAHash): Unit = {
-    import spark.implicits._
     import BucketedState._
     val chunksP = path(stateDir, "chunks")
     val docsP = path(stateDir, "docs")
     val pairsP = path(stateDir, "pairs")
+    val empty = bucketedStores(spark)
 
     // seen-ness probe: only the doc buckets this batch carries
     val batchDocBuckets = bucketsOf(newDocsRaw, col("doc_id"))
     val oldDocs = readBuckets(spark, docsP, batchId, "db", batchDocBuckets,
-      Seq.empty[Long].toDF("doc_id"))
+      empty("docs"))
 
     // in-batch + cross-batch doc dedup; min_by(payload, md5(payload))
     // gives the content total order (the LshStream determinism rule,
@@ -82,7 +92,7 @@ object PhashStream {
 
     val ckBuckets = bucketsOf(newChunks, col("ck"))
     val oldChunks = readBuckets(spark, chunksP, batchId, "kb", ckBuckets,
-      Seq.empty[(Long, Long, Int, Long)].toDF("doc_id", "ahash", "chunk", "ck"))
+      empty("chunks"))
     val pairs = Multimodal.phashPairs(newChunks, oldChunks.unionByName(newChunks))
 
     overwriteBatch(pairs, pairsP, batchId)

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import scala.jdk.CollectionConverters._
+
 /** Streaming semantic dedup: the incremental form of
   * [[Similarity.semDedup]] (SemDeDup, Abbas et al. 2023) — embedding
   * rows arrive in micro-batches and every τ-cosine duplicate pair
@@ -14,11 +16,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Shared machinery: assignment runs through
   * [[Similarity.semAssign]] — the SAME E-step (argmin centroid,
   * centroid-cosine identity, 8-dim sign-bucket) as the one-shot query,
-  * so online and offline cell geometry cannot disagree. Centroids are
-  * read fresh from `fixtureDir` per batch but the batch-equality
-  * contract assumes they are FIXED for the stream's lifetime (a
+  * so online and offline cell geometry cannot disagree. The batch-equality
+  * contract assumes centroids are FIXED for the stream's lifetime (a
   * retrain is a new stream over new state, the
-  * [[AssignStream]] retrain-pickup caveat made explicit).
+  * [[AssignStream]] retrain-pickup caveat made explicit), so
+  * [[semDedupStream]] resolves them ONCE when the query starts and
+  * hands every trigger the same k-row local table; [[processBatch]]
+  * still derives them from `fixtureDir` per call.
   *
   * Loser monotonicity makes the incremental form exact: a vector's
   * `kept` flag only ever flips true→false (pairs accumulate; the batch
@@ -54,8 +58,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * 100 TB shape per batch: assignment is batch-sized × broadcast
   * centroids (no corpus shuffle); the pair join keys on (cluster, sb)
   * with quadratic work confined to cap-guarded cells and ≥1-new-member
-  * sides; every accumulated-store read is bucket-pruned at
-  * file-listing time. Nothing iterates.
+  * sides; every accumulated-store read lists and scans only the
+  * touched buckets' directories ([[BucketedState.readBuckets]]).
+  * Nothing iterates.
   */
 object SemDedupStream {
 
@@ -64,6 +69,17 @@ object SemDedupStream {
 
   /** The cell key a vector's state row buckets under. */
   private def cellKey = xxhash64(col("cluster"), col("sb"))
+
+  /** Each bucketed store's `empty` frame for [[BucketedState.readBuckets]]:
+    * the columns its readers take, which every file of the store must
+    * carry (BucketedStateSpec pins them against the written files). */
+  private[graft] def bucketedStores(spark: SparkSession): Map[String, DataFrame] = {
+    import spark.implicits._
+    Map(
+      "vecs_cb" -> Seq.empty[(Long, Array[Float], Double, Int, Double, Int)]
+        .toDF("vec_id", "embedding", "norm", "cluster", "c_sim", "sb"),
+      "vecs_vb" -> Seq.empty[Long].toDF("vec_id"))
+  }
 
   /** One micro-batch: admit unseen vectors, detect every τ-pair with
     * ≥1 new member inside cap-small cells, record the losers.
@@ -97,18 +113,16 @@ object SemDedupStream {
                                       centroids: DataFrame, stateDir: String,
                                       batchId: Long, tau: Double,
                                       maxCell: Int): Unit = {
-    import spark.implicits._
     import BucketedState._
     val vecsCbP = path(stateDir, "vecs_cb")
     val vecsVbP = path(stateDir, "vecs_vb")
     val losersP = path(stateDir, "losers")
-    def emptyCells = Seq.empty[(Long, Array[Float], Double, Int, Double, Int)]
-      .toDF("vec_id", "embedding", "norm", "cluster", "c_sim", "sb")
+    val empty = bucketedStores(spark)
 
     // seen-ness probe: only the id buckets this batch carries
     val batchIdBuckets = bucketsOf(newVecsRaw, col("vec_id"))
     val oldIds = readBuckets(spark, vecsVbP, batchId, "vb", batchIdBuckets,
-      Seq.empty[Long].toDF("vec_id"))
+      empty("vecs_vb"))
 
     // in-batch + cross-batch dedup by vec_id; min_by over the JSON
     // rendering's md5 gives the content total order (the LshStream
@@ -126,7 +140,7 @@ object SemDedupStream {
     // cells this batch touches; the store read prunes to their buckets
     val touchedBuckets = bucketsOf(newAssigned, cellKey)
     val oldCells = readBuckets(spark, vecsCbP, batchId, "cb", touchedBuckets,
-      emptyCells)
+      empty("vecs_cb"))
     val allCells = oldCells.unionByName(newAssigned)
 
     // accumulated cell-size gate (PREFIX semantics — see scaladoc).
@@ -163,18 +177,24 @@ object SemDedupStream {
   }
 
   /** The streaming query: `foreachBatch` over a (vec_id, embedding)
-    * stream. */
+    * stream. The fixture's centroid table is aggregated and collected
+    * (k rows) once, here, and every trigger joins the same rows as a
+    * local relation — no per-trigger fixture scan or aggregation. */
   def semDedupStream(embStream: DataFrame, fixtureDir: String, stateDir: String,
                      checkpointDir: String, tau: Double = 0.3, maxCell: Int = 5000,
-                     trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
+                     trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery = {
+    val centroids = Similarity.centroidTable(embStream.sparkSession, fixtureDir)
+    val (rows, schema) = (centroids.collect().toSeq.asJava, centroids.schema)
     embStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch.sparkSession, batch, fixtureDir, stateDir, batchId,
-          tau, maxCell)
+        val spark = batch.sparkSession
+        processBatchWith(spark, batch, spark.createDataFrame(rows, schema),
+          stateDir, batchId, tau, maxCell)
       }
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .start()
+  }
 
   /** Current per-vector verdicts, the one-shot result's shape
     * (vec_id, cluster, c_sim, kept) — kept = never lost a pair. Same

@@ -52,23 +52,31 @@ object SpanStream {
   // store layout + replay-safe reads live in ONE home: BucketedState
   import BucketedState.{tablePath => path, overwriteBatch, readStore}
 
+  /** Each bucketed store's `empty` frame for [[BucketedState.readBuckets]]:
+    * the columns its readers take, which every file of the store must
+    * carry (BucketedStateSpec pins them against the written files). */
+  private[graft] def bucketedStores(spark: SparkSession): Map[String, DataFrame] = {
+    import spark.implicits._
+    val wins = Seq.empty[(Long, Long, Long)].toDF("doc_id", "pos", "h")
+    Map("wins_hb" -> wins, "wins_db" -> wins, "docs" -> Seq.empty[Long].toDF("doc_id"))
+  }
+
   /** One micro-batch. `batchId` must be the stream's monotone
     * micro-batch id (replay key AND state partition, as in
     * [[LshStream.processBatch]]). */
   def processBatch(spark: SparkSession, newDocsRaw: DataFrame, stateDir: String,
                    batchId: Long): Unit = {
-    import spark.implicits._
     import BucketedState._
     val winsHbP = path(stateDir, "wins_hb")
     val winsDbP = path(stateDir, "wins_db")
     val docsP = path(stateDir, "docs")
     val spansP = path(stateDir, "spans")
-    def emptyWins = Seq.empty[(Long, Long, Long)].toDF("doc_id", "pos", "h")
+    val empty = bucketedStores(spark)
 
     // seen-ness probe reads only the doc buckets this batch carries
     val batchDocBuckets = bucketsOf(newDocsRaw, col("doc_id"))
     val oldDocsPruned = readBuckets(spark, docsP, batchId, "db", batchDocBuckets,
-      Seq.empty[Long].toDF("doc_id"))
+      empty("docs"))
 
     // min_by(text, md5(text)): deterministic in-batch doc dedup (the
     // LshStream.processBatch note — first() is partition-order-dependent)
@@ -86,7 +94,7 @@ object SpanStream {
     // cohabitants to the touched hashes themselves.
     val touchedBuckets = bucketsOf(newWins, col("h"))
     val winsTouched = readBuckets(spark, winsHbP, batchId, "hb", touchedBuckets,
-      emptyWins).unionByName(newWins)
+      empty("wins_hb")).unionByName(newWins)
     val touched = newWins.select(col("h")).distinct()
     // shared-status of touched hashes over the WHOLE accumulated corpus
     // (complete despite pruning: every row carrying a touched hash lives
@@ -106,12 +114,12 @@ object SpanStream {
     // OTHER spans must survive the rewrite)
     val affDocBuckets = bucketsOf(affectedDocs, col("doc_id"))
     val affWins = readBuckets(spark, winsDbP, batchId, "db", affDocBuckets,
-      emptyWins).unionByName(newWins)
+      empty("wins_db")).unionByName(newWins)
       .join(affectedDocs, Seq("doc_id"), "left_semi")
       .localCheckpoint(true)
     val themBuckets = bucketsOf(affWins, col("h"))
     val winsForThem = readBuckets(spark, winsHbP, batchId, "hb", themBuckets,
-      emptyWins).unionByName(newWins)
+      empty("wins_hb")).unionByName(newWins)
     val sharedForThem = winsForThem
       .join(affWins.select(col("h")).distinct(), Seq("h"), "left_semi")
       .groupBy(col("h"))

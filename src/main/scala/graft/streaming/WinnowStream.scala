@@ -15,7 +15,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * State under `stateDir`, batch-partitioned (exactly-once replay:
   * read strictly-before my id, overwrite my own partition) with inner
-  * bucket partitions (per-batch reads prune at file-listing time):
+  * bucket partitions (per-batch reads list and scan only the touched
+  * buckets' directories):
   *   - `fps`  — (doc_id, fp) winnow fingerprints of every doc seen,
   *              bucketed by `fb = fp % 256` (the pair probe reads only
   *              the batch's fingerprint buckets)
@@ -48,23 +49,33 @@ object WinnowStream {
 
   import BucketedState.{tablePath => path, _}
 
+  /** Each bucketed store's `empty` frame for [[BucketedState.readBuckets]]:
+    * the columns its readers take, which every file of the store must
+    * carry (BucketedStateSpec pins them against the written files). */
+  private[graft] def bucketedStores(spark: SparkSession): Map[String, DataFrame] = {
+    import spark.implicits._
+    Map(
+      "seen" -> Seq.empty[Long].toDF("doc_id"),
+      "fps" -> Seq.empty[(Long, Long)].toDF("doc_id", "fp"))
+  }
+
   /** One micro-batch: pair against everything seen, then admit the
     * batch. Batch-static and callable directly (the spec's equivalence
     * harness); `batchId` must be monotone — it is the replay key and
     * the state partition. */
   def processBatch(spark: SparkSession, newDocsRaw: DataFrame, stateDir: String,
                    batchId: Long, maxBucket: Int = 50): Unit = {
-    import spark.implicits._
     val fpsP = path(stateDir, "fps")
     val seenP = path(stateDir, "seen")
     val pairsP = path(stateDir, "pairs")
+    val empty = bucketedStores(spark)
 
     // seen-ness probe: only the doc buckets this batch carries; dedup
     // discipline identical to LshStream (min_by md5 = deterministic
     // winner for a doc_id carrying two texts in one batch)
     val batchDocBuckets = bucketsOf(newDocsRaw, col("doc_id"))
     val oldSeen = readBuckets(spark, seenP, batchId, "db", batchDocBuckets,
-      Seq.empty[Long].toDF("doc_id"))
+      empty("seen"))
     val newDocs = newDocsRaw.select(col("doc_id"), col("text"))
       .groupBy(col("doc_id")).agg(min_by(col("text"), md5(col("text"))).as("text"))
       .join(oldSeen, Seq("doc_id"), "left_anti")
@@ -74,7 +85,7 @@ object WinnowStream {
     val newFps = Dedup.winnowFingerprints(newDocs).localCheckpoint(true)
     val fpBuckets = bucketsOf(newFps, col("fp"))
     val oldFps = readBuckets(spark, fpsP, batchId, "fb", fpBuckets,
-      Seq.empty[(Long, Long)].toDF("doc_id", "fp"))
+      empty("fps"))
 
     // accumulated-size bucket cap (prefix semantics, see object doc)
     val small = oldFps.unionByName(newFps)

@@ -1,8 +1,9 @@
 package graft
 
-import graft.operators.Dedup
-import graft.streaming.{BucketedState, LshStream, SpanStream}
+import graft.operators.{Dedup, Multimodal}
+import graft.streaming.{BucketedState, LshStream, PhashStream, SemDedupStream, SpanStream, WinnowStream}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The VERDICT r12 ask-#4 contract: a micro-batch's reads of the
@@ -28,15 +29,7 @@ class BucketedStateSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try {
       val r = f
-      var last = -1L
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 100) {
-        Thread.sleep(100); waited += 1
-        val now = acc.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      (r, acc.get())
+      (r, settled(acc))
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
@@ -67,15 +60,7 @@ class BucketedStateSpec extends SparkSpec {
     spark.listenerManager.register(listener)
     try {
       val r = f
-      var last = -1L
-      var stable = 0
-      var waited = 0
-      while (stable < 3 && waited < 100) {
-        Thread.sleep(100); waited += 1
-        val now = acc.get()
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      (r, acc.get())
+      (r, settled(acc))
     } finally spark.listenerManager.unregister(listener)
   }
 
@@ -204,5 +189,108 @@ class BucketedStateSpec extends SparkSpec {
     val pairs = LshStream.pairs(spark, st)
       .filter(col("d1") === 0L && col("d2") === 10000L).count()
     assert(pairs == 1L, "cross-batch duplicate pair not detected under pruned reads")
+  }
+
+  // 40 batches x 40 bucket directories, one file each: the shape in
+  // which a whole-store listing (`spark.read.parquet(<root>)`) started a
+  // parallel-listing job for every batch directory (> 32 children)
+  private lazy val wideStore: String = {
+    import spark.implicits._
+    val root = tmp("widestore") + "/t"
+    (0 until 40 * 40 * 4).map(i => (i.toLong, (i / 160).toLong, (i % 40).toLong))
+      .toDF("doc_id", "batch", "h")
+      .withColumn("hb", BucketedState.bucketOf(col("h")))
+      .repartition(col("batch"), col("hb"))
+      .write.partitionBy("batch", "hb").parquet(root)
+    root
+  }
+  private def wideEmpty = {
+    import spark.implicits._
+    Seq.empty[(Long, Long)].toDF("doc_id", "h")
+  }
+
+  test("readBuckets builds and plans its frame with zero Spark jobs over a 40x40 store") {
+    val root = wideStore
+    val ((df, _), jobs) = jobsDuring {
+      val df = BucketedState.readBuckets(spark, root, 40L, "hb", 0 until 40, wideEmpty)
+      (df, df.queryExecution.executedPlan)
+    }
+    assert(jobs == 0, s"building the read ran $jobs Spark jobs")
+    // the frame is the whole requested state, so nothing was skipped
+    assert(df.count() == 40 * 40 * 4)
+  }
+
+  test("readBuckets scans exactly the files of the requested buckets of earlier batches") {
+    val want = Seq(3, 17, 39)
+    val root = wideStore
+    val (rows, files) = filesScannedDuring {
+      BucketedState.readBuckets(spark, root, 25L, "hb", want, wideEmpty).collect()
+    }
+    val onDisk = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
+      try s.filter { p =>
+        val batch = p.getParent.getParent.getFileName.toString
+        val bucket = p.getParent.getFileName.toString
+        p.toString.endsWith(".parquet") &&
+          batch.stripPrefix("batch=").toLong < 25L &&
+          want.contains(bucket.stripPrefix("hb=").toInt)
+      }.count()
+      finally s.close()
+    }
+    assert(onDisk == 25 * want.size)
+    assert(files == onDisk, s"scan selected $files files, expected the $onDisk on disk")
+    val expect = spark.read.parquet(root)
+      .filter(col("batch") < 25L && col("hb").isin(want: _*))
+      .select("doc_id", "h").collect()
+    assert(rows.sortBy(_.getLong(0)).toSeq == expect.sortBy(_.getLong(0)).toSeq)
+  }
+
+  /** Row multiset, for frames whose rows carry arrays. */
+  private def bag(df: DataFrame): Map[Row, Int] =
+    df.collect().groupBy(identity).view.mapValues(_.length).toMap
+
+  test("every streaming operator's store reads back equal to a plain parquet read of its files") {
+    import spark.implicits._
+    val docs = seedDocs(60)
+    val textBatches = Seq(docs.take(30), docs.drop(30) :+ (10000L -> docs.head._2))
+      .map(_.toDF("doc_id", "text"))
+    val embs = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val imgs = Multimodal.bmpPayloads(spark, sf).localCheckpoint(true)
+    val operators: Seq[(String, Map[String, DataFrame], String => Unit)] = Seq(
+      ("LshStream", LshStream.bucketedStores(spark), st => textBatches.zipWithIndex
+        .foreach { case (b, i) => LshStream.processBatch(spark, b, st, i.toLong) }),
+      ("SpanStream", SpanStream.bucketedStores(spark), st => textBatches.zipWithIndex
+        .foreach { case (b, i) => SpanStream.processBatch(spark, b, st, i.toLong) }),
+      ("WinnowStream", WinnowStream.bucketedStores(spark), st => textBatches.zipWithIndex
+        .foreach { case (b, i) => WinnowStream.processBatch(spark, b, st, i.toLong) }),
+      ("PhashStream", PhashStream.bucketedStores(spark), st => (0 until 2).foreach { i =>
+        PhashStream.processBatch(spark, imgs.filter(col("doc_id") % 2 === i), st, i.toLong) }),
+      ("SemDedupStream", SemDedupStream.bucketedStores(spark), st => (0 until 2).foreach { i =>
+        SemDedupStream.processBatch(spark, embs.filter(col("vec_id") % 2 === i), sf, st,
+          i.toLong) }))
+    operators.foreach { case (name, stores, run) =>
+      val st = tmp(name)
+      run(st)
+      assert(stores.nonEmpty)
+      stores.foreach { case (table, empty) =>
+        val p = BucketedState.tablePath(st, table)
+        // the bucket column is the store's inner partition directory name
+        val bucketCol = new java.io.File(p, "batch=0").listFiles().filter(_.isDirectory)
+          .head.getName.takeWhile(_ != '=')
+        val plain = spark.read.parquet(p).drop("batch", bucketCol)
+        assert(empty.columns.toSet.subsetOf(plain.columns.toSet),
+          s"$name/$table: empty frame ${empty.schema.simpleString} names columns " +
+            s"the files lack (${plain.schema.simpleString})")
+        val read = BucketedState.readBuckets(spark, p, Long.MaxValue, bucketCol,
+          0 until BucketedState.NumBuckets, empty)
+        val expect = plain.select(empty.columns.map(col).toSeq: _*)
+        // both reads are nullable file-source schemas: equal iff the types match
+        assert(read.schema == expect.schema,
+          s"$name/$table: read as ${read.schema.simpleString}, stored as ${expect.schema.simpleString}")
+        val got = bag(read)
+        assert(got.nonEmpty, s"$name/$table read back no rows")
+        assert(got == bag(expect), s"$name/$table rows differ from a plain read of its files")
+      }
+    }
   }
 }

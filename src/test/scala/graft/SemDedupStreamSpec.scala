@@ -138,4 +138,21 @@ class SemDedupStreamSpec extends SparkSpec {
     assert(got.size == expect.size && got == expect,
       s"trained stream/batch diverged (${got.size} vs ${expect.size})")
   }
+
+  test("jobs per micro-batch do not grow with the stream's history") {
+    val dir = java.nio.file.Files.createTempDirectory("semdedup_jobs").toString
+    val embs = Tables.embeddings(spark, sf).select("vec_id", "embedding").cache()
+    // seven equal batches of 60 shuffled ids: from batch 1 on, each meets
+    // earlier state in both stores, so every later batch plans the same
+    // reads. Each touches more than 32 id buckets: a whole-store listing
+    // would add a job for every earlier batch.
+    val ids = new scala.util.Random(7).shuffle(embs.select("vec_id").as[Long].collect().sorted.toSeq)
+      .take(7 * 60).grouped(60).toSeq
+    assert(ids.size == 7 && ids.forall(_.size == 60))
+    val jobs = ids.zipWithIndex.map { case (b, i) =>
+      jobsDuring(SemDedupStream.processBatch(spark,
+        embs.filter(col("vec_id").isInCollection(b)), sf, dir, i.toLong))._2
+    }
+    assert(jobs(6) == jobs(2), s"jobs per micro-batch: ${jobs.mkString(", ")}")
+  }
 }

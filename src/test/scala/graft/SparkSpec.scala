@@ -15,4 +15,32 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** The counter's value once the async listener bus has drained:
+    * polled until stable (no fixed sleep). */
+  def settled(acc: java.util.concurrent.atomic.AtomicLong): Long = {
+    var last = -1L
+    var stable = 0
+    var waited = 0
+    while (stable < 3 && waited < 100) {
+      Thread.sleep(100); waited += 1
+      val now = acc.get()
+      if (now == last) stable += 1 else { stable = 0; last = now }
+    }
+    acc.get()
+  }
+
+  /** Spark jobs started during `f`. */
+  def jobsDuring[T](f: => T): (T, Long) = {
+    val acc = new java.util.concurrent.atomic.AtomicLong(0L)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        acc.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val r = f
+      (r, settled(acc))
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }

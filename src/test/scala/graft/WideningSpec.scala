@@ -47,4 +47,34 @@ class WideningSpec extends SparkSpec {
     val w = Tables.widenedBy(nation, col("n_nationkey"))
     assert(width(w) === width(nation))
   }
+
+  test("width is bytes / bytesPerTask + 1, worked by hand") {
+    // 5000 longs: Range estimates 8 B a row = 40,000 B, and
+    // 40,000 / 16,384 (heavy class) = 2, + 1 = 3 tasks
+    assume(spark.sparkContext.defaultParallelism >= 3)
+    val r = spark.range(0, 5000, 1, 1).toDF()
+    assert(r.queryExecution.optimizedPlan.stats.sizeInBytes == BigInt(40000))
+    val w = Tables.widenedBy(r, col("id"))
+    assert(width(r) === 1 && width(w) === 3)
+    assert(w.count() === 5000)
+    assert(Tables.widthFor(1, 8, BigInt(40000), 16L << 10) === 3)
+  }
+
+  test("an estimate above Long.MaxValue widens to full parallelism, not a wrapped width") {
+    // a product of two huge inputs: the estimate is the product of the
+    // children's sizes, far past Long.MaxValue even after the division
+    val big = spark.range(0, Long.MaxValue, 1, 1).toDF("a")
+      .crossJoin(spark.range(0, Long.MaxValue, 1, 1).toDF("b"))
+    val p = spark.sparkContext.defaultParallelism
+    val bytes = big.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(bytes / Tables.WidenHeavyBytesPerTask > BigInt(Long.MaxValue))
+    assert(Tables.widthFor(1, p, bytes, Tables.WidenHeavyBytesPerTask) === p)
+    // the planned width only: running the product is out of the question
+    val w = Tables.widenedBy(big, col("a"))
+    val planned = w.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionByExpression =>
+        r.numPartitions
+    }
+    assert(planned === Some(p))
+  }
 }
